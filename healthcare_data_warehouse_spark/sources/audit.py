@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,14 @@ AUDIT_SCHEMA = T.StructType([
 ])
 
 
+# Serialises appends within one process. Concurrent appends to one
+# parquet directory share its ``_temporary/0/`` staging dir, and one job's
+# commit deletes the other job's attempt files (observed with concurrent
+# ApiServer handler threads: tasks fail with "chmod: cannot access
+# .../_temporary/0/_temporary/attempt_...").
+_APPEND_LOCK = threading.Lock()
+
+
 def audit_log_path() -> str:
     return os.path.join(SCRATCH_DIR, "audit_log")
 
@@ -36,10 +45,13 @@ def audit_log_path() -> str:
 def log_audit(spark: SparkSession, action_type: str, table_name: str,
               user_name: str = "etl_process", details: str = "") -> None:
     """Append one event row (init.sql:156-167 analog). Append-only parquet —
-    at scale this is the pattern for any immutable event sink."""
+    at scale this is the pattern for any immutable event sink. Appends are
+    serialised (``_APPEND_LOCK``), so concurrent callers are safe."""
     row = [(str(uuid.uuid4()), action_type, table_name, user_name,
             dt.datetime.now(dt.timezone.utc).replace(tzinfo=None), details)]
-    spark.createDataFrame(row, AUDIT_SCHEMA).write.mode("append").parquet(audit_log_path())
+    df = spark.createDataFrame(row, AUDIT_SCHEMA)
+    with _APPEND_LOCK:
+        df.write.mode("append").parquet(audit_log_path())
 
 
 def audited_read(spark: SparkSession, sf_dir: str | None, name: str,

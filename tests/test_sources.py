@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 
@@ -11,6 +14,7 @@ from healthcare_data_warehouse_spark.config import SCRATCH_DIR
 from healthcare_data_warehouse_spark.sources.audit import (
     audit_log_path,
     audited_read,
+    log_audit,
     read_audit_log,
 )
 from healthcare_data_warehouse_spark.sources.sinks import upsert, upsert_to_path
@@ -51,6 +55,45 @@ def test_audited_read_logs_event(spark):
     # second read appends, never overwrites
     audited_read(spark, SF_SMOKE, "nation", user_name="tester")
     assert read_audit_log(spark).count() == 2
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+
+
+def test_concurrent_log_audit_appends_all_rows(spark, monkeypatch):
+    """Concurrent appends (ApiServer handler threads) share the audit
+    log's ``_temporary/0/`` staging dir, where one job's commit deletes
+    the other's attempt files; log_audit must run them one at a time."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+    guard = threading.Lock()
+    active, peak = 0, 0
+
+    def tracked(self, *args, **kwargs):
+        nonlocal active, peak
+        with guard:
+            active += 1
+            peak = max(peak, active)
+        try:
+            time.sleep(0.05)  # widen the window in which appends overlap
+            return write(self, *args, **kwargs)
+        finally:
+            with guard:
+                active -= 1
+
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+    log_audit(spark, "READ", "seed", user_name="concurrency")
+    before = read_audit_log(spark).count()
+    monkeypatch.setattr(DataFrameWriter, "parquet", tracked)
+    with ThreadPoolExecutor(4) as pool:
+        futs = [pool.submit(log_audit, spark, "READ", f"t{i}", "concurrency")
+                for i in range(4)]
+        for f in futs:
+            f.result(timeout=120)  # re-raises a failed append
+    monkeypatch.undo()
+    assert peak == 1
+    log = read_audit_log(spark)
+    assert log.count() == before + 4
+    assert {r["table_name"] for r in log.collect()} == {"seed", "t0", "t1", "t2", "t3"}
     shutil.rmtree(audit_log_path(), ignore_errors=True)
 
 
